@@ -132,16 +132,16 @@ def run_single(cores: int, n_convs: int, root: str, trials: int = 2,
     idx = Index.load(spark, root)
     idx.warm(spark)
     # Throughput workload: the fixture set tiled to 300 distinct query ids.
-    # NOTE (round 5): bm25_query_topk now dedups textually identical
-    # queries (one kernel per distinct term vector + broadcast fan-out),
-    # so this tiled workload exercises the dedup fast path — its q/s is
+    # NOTE (round 5): bm25_query_topk now dedups queries with the same
+    # post-tokenize term multiset (one kernel per distinct term vector +
+    # broadcast fan-out), so this tiled workload exercises the dedup fast path — its q/s is
     # NOT comparable to pre-dedup rounds (BENCH.md "Query-batch
     # redundancy"). Build throughput, the north-rule headline, is
     # unaffected. Parallelism comes from INTER-query distribution (the
-    # groupBy query_id shuffle spreads queries across all cores);
-    # n_score_partitions stays 1 — per-query posting volume at this sf is
-    # far too small to amortize intra-query splitting (that mode is for
-    # hot terms at the full corpus tier, see operators/scorer.py).
+    # groupBy query_id shuffle spreads queries across all cores), not
+    # doc-range splitting — per-query posting volume at this sf is far
+    # too small to amortize it (bm25_query_topk_scan is for hot terms at
+    # the full corpus tier, see operators/scorer.py).
     fixture = [
         (r["query_id"], r["query_text"])
         for _, r in gen_queries(n_convs).iterrows()
@@ -442,7 +442,7 @@ parallelism levels").
 - The only driver-side work is O(#buckets) offset computation and
   O(#stages) table commits — independent of corpus size.
 - Queries prune by `term_bucket` partition + term predicate at the scan
-  and split scoring across doc-aligned ranges (`n_score_partitions`), so
+  and split scoring across doc-aligned ranges (`bm25_query_topk_scan`), so
   query parallelism scales with cores while staying exact.
 """
     with open(args.out_md, "w") as f:

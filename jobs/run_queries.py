@@ -10,9 +10,9 @@ Cluster run:
         --queries    queries.tsv --k 10 --out results.parquet
 
 --queries is a TSV of ``query_id<TAB>query_text``; --fixture-convs uses
-the deterministic seeded fixture set instead. --score-partitions > 1
-splits each query's scoring across doc-id ranges (exact; use ~executor
-cores for fat analytical queries, keep 1 for interactive latency).
+the deterministic seeded fixture set instead. --mode scan groups the
+scoring by doc-id range instead of by query (exact; for large analytical
+batches and fat hot-term queries; group mode for interactive latency).
 Prints one JSON line with batch throughput and per-query p50/p99.
 """
 
@@ -40,7 +40,6 @@ def parse_args(argv=None):
     p.add_argument("--index-root", required=True)
     p.add_argument("--k", type=int, default=10)
     p.add_argument("--master", default=None)
-    p.add_argument("--score-partitions", type=int, default=1)
     p.add_argument("--mode", choices=["group", "scan"], default="group",
                    help="group: per-query WAND groups (selective batches);"
                         " scan: doc-range groups with queries shipped to"
@@ -90,10 +89,7 @@ def main(argv=None) -> dict:
 
         out = bm25_query_topk_scan(spark, idx, qset, args.k)
     else:
-        out = bm25_query_topk(
-            spark, idx, qset, args.k,
-            n_score_partitions=args.score_partitions,
-        )
+        out = bm25_query_topk(spark, idx, qset, args.k)
     if args.out:
         out.write.mode("overwrite").parquet(args.out)
         n_rows = spark.read.parquet(args.out).count()

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkrec import BM25_B, BM25_K1
-from sparkrec.operators.bm25 import term_freqs, tokenize_docs
+from sparkrec.operators.bm25 import idf_expr, term_freqs, tokenize_docs
 from sparkrec.operators.codec import decode_postings_many, encode_postings_many
 from sparkrec.operators.docs import assemble_docs, assign_doc_ids
 from sparkrec.sources.tables import (
@@ -91,9 +91,9 @@ class IndexConfig:
     # straggler-bound (hot-term groups pin whole tasks; 8-core encode wall
     # 71 s) while 16k groups smooth the distribution (50 s at 8 cores,
     # fastest measured at 2 cores too). Re-confirmed at 32 cores by the
-    # round-4 steal-gated A/B (jobs/ab_shards.py; BENCH.md "Round-4
-    # docs_per_shard A/B"): 16k won the clean-trial build wall 12.9 s vs
-    # 17.8 s. Block CONTENTS and query results
+    # round-4 steal-gated A/B (BENCH.md "Round-4 docs_per_shard A/B"; the
+    # A/B script is in git history, ee7da7f:jobs/ab_shards.py): 16k won
+    # the clean-trial build wall 12.9 s vs 17.8 s. Block CONTENTS and query results
     # are identical for any value here (blocks are cut at block_range
     # boundaries inside any grouping) — but the stored `shard` column
     # values and shard counts DO change with it, so treat a retune as a
@@ -122,6 +122,12 @@ class IndexConfig:
                 "bound is max(docs_per_shard, block_range), so a smaller "
                 "value would not tighten the cap, only mislead"
             )
+
+
+def term_bucket(n_term_buckets: int):
+    """The ``term_bucket`` partition key of a ``term`` column: the same
+    Catalyst expression for the build, the lexicon and delta merges."""
+    return F.pmod(F.xxhash64("term"), F.lit(n_term_buckets)).cast("int")
 
 
 def encode_postings(
@@ -567,10 +573,7 @@ def build_index_from_docs(
                 enc = encode_postings_twophase(docs, cfg)
             else:
                 enc = encode_postings(term_freqs(docs), n_docs, avgdl, cfg)
-            enc = enc.withColumn(
-                "term_bucket",
-                F.pmod(F.xxhash64("term"), F.lit(cfg.n_term_buckets)).cast("int"),
-            )
+            enc = enc.withColumn("term_bucket", term_bucket(cfg.n_term_buckets))
             write_table(enc, index_root, "postings", partition_by=["term_bucket"])
 
     with Stage("lexicon", index_root, overwrite, metrics) as st:
@@ -580,20 +583,8 @@ def build_index_from_docs(
             lex = (
                 blocks.groupBy("term")
                 .agg(F.sum("n").cast("long").alias("df"))
-                .withColumn(
-                    "idf",
-                    F.log(
-                        (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-                        / (F.col("df") + F.lit(0.5))
-                        + F.lit(1.0)
-                    ),
-                )
-                .withColumn(
-                    "term_bucket",
-                    F.pmod(
-                        F.xxhash64("term"), F.lit(cfg.n_term_buckets)
-                    ).cast("int"),
-                )
+                .withColumn("idf", idf_expr(F.col("df"), n_docs))
+                .withColumn("term_bucket", term_bucket(cfg.n_term_buckets))
             )
             write_table(lex, index_root, "lexicon")
 

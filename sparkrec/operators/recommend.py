@@ -165,7 +165,7 @@ def recommend(
     oracle determinism).
     """
     from sparkrec.operators.bm25 import (
-        bm25_contrib_expr, corpus_stats, doc_freqs, term_freqs,
+        bm25_contrib_expr, corpus_stats, doc_freqs, idf_expr, term_freqs,
     )
 
     if isinstance(inputs, str):  # str→[str] coercion (model.py:328-329)
@@ -208,16 +208,12 @@ def recommend(
     tf = term_freqs(tokenized.select(id_col, "doc_len", tokens_col))
     dfr = doc_freqs(tf)
     n_docs, avgdl = corpus_stats(tokenized)
-    idf = F.log(
-        (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5)) + F.lit(1.0)
-    )
     qterms = (
         found.select("ord", F.explode("_qtoks").alias("term"))
         .groupBy("ord", "term")
         .agg(F.count(F.lit(1)).alias("qtf"))
         .join(dfr, "term")
-        .withColumn("idf", idf)
+        .withColumn("idf", idf_expr(F.col("df"), n_docs))
     )
     contrib = tf.join(F.broadcast(qterms), "term").select(
         "ord", id_col,

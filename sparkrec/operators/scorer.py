@@ -21,6 +21,11 @@ yields final scores for every doc in the segment. The kernel therefore:
 Everything is vectorized: decode is the batched varint codec; per-segment
 accumulation is sort + reduceat. Exactness is tested against both the
 exhaustive DataFrame path and the pure-Python oracle.
+
+All three entry points share one pipeline: ``_plan`` (freshness check,
+tokenize, dedup, lexicon) → ``_blocks`` (the pruned block scan) → a
+module-level kernel (``wand_topk`` per query, or ``_score_range`` per
+doc range) built from the same per-doc sum, trim and ranking helpers.
 """
 
 from __future__ import annotations
@@ -28,22 +33,52 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparkrec.operators.codec import bm25_weight, decode_postings_many
 from sparkrec.operators.indexer import Index
 
 TOPK_SCHEMA = "query_id string, rank int, doc_id long, score double"
+_ENC_COLS = ["docs_enc", "tfs_enc", "dls_enc"]
+_WAND_COLS = ["term", "block_id", "max_tf", "min_dl", *_ENC_COLS]
+
+
+def _doc_sums(docs: np.ndarray, w: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Per-doc score sums: stable sort by doc, then reduceat — the
+    accumulation order is fixed by the input row order."""
+    srt = np.argsort(docs, kind="stable")
+    sd, sw = docs[srt], w[srt]
+    starts = np.flatnonzero(np.concatenate(([True], sd[1:] != sd[:-1])))
+    return sd[starts], np.add.reduceat(sw, starts)
+
+
+def _trim(doc_ids: np.ndarray, scores: np.ndarray, k: int):
+    """The top k scores, keeping every tie with the k-th so the doc_id asc
+    tie-break stays exact across segment and range boundaries."""
+    if len(scores) > k:
+        thr = np.partition(-scores, k - 1)[k - 1]
+        keep = np.flatnonzero(-scores <= thr)
+        doc_ids, scores = doc_ids[keep], scores[keep]
+    return doc_ids, scores
+
+
+def _ranked(qid, doc_ids: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
+    """TOPK_SCHEMA rows: the first k by (score desc, doc_id asc)."""
+    order = np.lexsort((doc_ids, -scores))[:k]
+    return pd.DataFrame(
+        {
+            "query_id": qid,
+            "rank": np.arange(1, len(order) + 1, dtype=np.int32),
+            "doc_id": doc_ids[order],
+            "score": scores[order],
+        }
+    )
 
 
 def wand_topk(
-    blocks: pd.DataFrame,
-    term_meta: dict[str, tuple[float, int]],
-    k: int,
-    avgdl: float,
-    k1: float,
-    b: float,
+    blocks: pd.DataFrame, term_meta: dict[str, tuple[float, int]], k: int,
+    avgdl: float, k1: float, b: float,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Exact top-k over one query's posting blocks.
 
@@ -65,8 +100,8 @@ def wand_topk(
     # multi-term doc's score would depend on Spark's group-row arrival
     # order. Sorting by (term, block_id) makes scores a pure function of
     # the query + index at ANY parallelism/arrival order, and is the
-    # same per-doc term-major order the scan path uses
-    # (bm25_query_topk_scan) — the two paths agree bit-for-bit.
+    # same per-doc term-major order the range kernel uses
+    # (``_score_range``) — the two paths agree bit-for-bit.
     blocks = blocks.sort_values(
         ["term", "block_id"], kind="mergesort", ignore_index=True
     )
@@ -74,18 +109,18 @@ def wand_topk(
     factor = np.array(
         [term_meta[t][0] * term_meta[t][1] for t in blocks["term"]], dtype=np.float64
     )
-    gids = blocks["block_id"].to_numpy(dtype=np.int64)
     ub_weight = bm25_weight(
         blocks["max_tf"].to_numpy(dtype=np.int64),
         blocks["min_dl"].to_numpy(dtype=np.int64),
         avgdl, k1, b,
     )
-    ub_contrib = factor * ub_weight
 
     # per-segment upper bounds
-    seg_ids, seg_inv = np.unique(gids, return_inverse=True)
+    seg_ids, seg_inv = np.unique(
+        blocks["block_id"].to_numpy(dtype=np.int64), return_inverse=True
+    )
     seg_ub = np.zeros(len(seg_ids), dtype=np.float64)
-    np.add.at(seg_ub, seg_inv, ub_contrib)
+    np.add.at(seg_ub, seg_inv, factor * ub_weight)
 
     order = np.argsort(-seg_ub, kind="stable")  # segments by UB desc
 
@@ -95,9 +130,7 @@ def wand_topk(
     visited = 0
     chunk = max(8, 2 * k)
 
-    docs_enc = blocks["docs_enc"].to_numpy(dtype=object)
-    tfs_enc = blocks["tfs_enc"].to_numpy(dtype=object)
-    dls_enc = blocks["dls_enc"].to_numpy(dtype=object)
+    encs = [blocks[c].to_numpy(dtype=object) for c in _ENC_COLS]
 
     while visited < len(order):
         take = order[visited : visited + chunk]
@@ -109,39 +142,24 @@ def wand_topk(
             break
         visited += chunk
 
-        sel = np.isin(seg_inv, take)
-        idx = np.flatnonzero(sel)
-        if len(idx) == 0:
-            continue
+        # every segment in ``take`` has rows, so ``idx`` is never empty
+        idx = np.flatnonzero(np.isin(seg_inv, take))
         d_lists, t_lists, l_lists = decode_postings_many(
-            [docs_enc[i] for i in idx],
-            [tfs_enc[i] for i in idx],
-            [dls_enc[i] for i in idx],
+            *([enc[i] for i in idx] for enc in encs)
         )
         lens = np.array([len(x) for x in d_lists], dtype=np.int64)
         flat_docs = np.concatenate(d_lists).astype(np.int64)
-        flat_tf = np.concatenate(t_lists)
-        flat_dl = np.concatenate(l_lists)
-        w = bm25_weight(flat_tf, flat_dl, avgdl, k1, b)
+        w = bm25_weight(np.concatenate(t_lists), np.concatenate(l_lists),
+                        avgdl, k1, b)
         w *= np.repeat(factor[idx], lens)
 
-        # accumulate per doc: sort by doc then reduceat (deterministic order)
-        srt = np.argsort(flat_docs, kind="stable")
-        sd = flat_docs[srt]
-        sw = w[srt]
-        starts = np.flatnonzero(np.concatenate(([True], sd[1:] != sd[:-1])))
-        seg_doc_ids = sd[starts]
-        seg_scores = np.add.reduceat(sw, starts)
-
-        # merge into running top-k
-        top_docs = np.concatenate((top_docs, seg_doc_ids))
-        top_scores = np.concatenate((top_scores, seg_scores))
-        if len(top_scores) > k:
-            # trim to the top k (keeping score ties so the doc_id asc
-            # tie-break stays exact across segment boundaries)
-            keep_thresh = np.partition(-top_scores, k - 1)[k - 1]
-            keep = np.flatnonzero(-top_scores <= keep_thresh)
-            top_docs, top_scores = top_docs[keep], top_scores[keep]
+        # merge the chunk's per-doc sums into the running top-k
+        seg_doc_ids, seg_scores = _doc_sums(flat_docs, w)
+        top_docs, top_scores = _trim(
+            np.concatenate((top_docs, seg_doc_ids)),
+            np.concatenate((top_scores, seg_scores)),
+            k,
+        )
         if len(top_scores) >= k:
             theta = -np.partition(-top_scores, k - 1)[k - 1]
 
@@ -150,22 +168,74 @@ def wand_topk(
     return top_docs[order], top_scores[order]
 
 
+def _score_group(
+    pdf: pd.DataFrame, k: int, avgdl: float, k1: float, b: float
+) -> pd.DataFrame:
+    """Group-mode kernel: one query's joined block rows (with its idf and
+    qtf per term) → that query's top-k via ``wand_topk``."""
+    meta = {t: (float(idf), int(qtf))
+            for t, idf, qtf in zip(pdf["term"], pdf["idf"], pdf["qtf"])}
+    doc_ids, scores = wand_topk(pdf, meta, k, avgdl, k1, b)
+    return _ranked(pdf["query_id"].iloc[0], doc_ids, scores, k)
+
+
+def _score_range(
+    pdf: pd.DataFrame, q_items: list, k: int, avgdl: float, k1: float, b: float
+) -> pd.DataFrame:
+    """Range-mode kernel: every query in ``q_items`` (query_id → {term:
+    (idf, qtf)}) scored exhaustively over one doc-range group's blocks.
+
+    Canonical (term, block_id) row order, then every block is decoded
+    ONCE; per-posting bm25 weights are query-independent, so they are
+    computed once per term too — per query only its factor-scaled
+    gather + per-doc sum remains."""
+    pdf = pdf.sort_values(["term", "block_id"], kind="mergesort", ignore_index=True)
+    d_lists, t_lists, l_lists = decode_postings_many(
+        *(list(pdf[c]) for c in _ENC_COLS)
+    )
+    terms = pdf["term"].to_numpy(dtype=object)
+    cuts = np.flatnonzero(
+        np.concatenate(([True], terms[1:] != terms[:-1], [True]))
+    )
+    term_dw: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+    for i, j in zip(cuts[:-1], cuts[1:]):
+        term_dw[terms[i]] = (
+            np.concatenate(d_lists[i:j]).astype(np.int64),
+            bm25_weight(np.concatenate(t_lists[i:j]),
+                        np.concatenate(l_lists[i:j]), avgdl, k1, b),
+        )
+    out = []
+    for qid, meta in q_items:
+        hit = [t for t in sorted(meta) if t in term_dw]
+        if not hit:
+            continue
+        docs = np.concatenate([term_dw[t][0] for t in hit])
+        w = np.concatenate(
+            [term_dw[t][1] * (meta[t][0] * meta[t][1]) for t in hit]
+        )
+        out.append(_ranked(qid, *_trim(*_doc_sums(docs, w), k), k))
+    return pd.concat(
+        out or [_ranked(None, np.zeros(0, np.int64), np.zeros(0), k)],
+        ignore_index=True,
+    )
+
+
 def _query_term_rows(
     queries: list[tuple[str, str]], min_token_len: int, remove_numeric: bool
-) -> list[tuple[str, str, int]]:
+) -> dict[str, list[tuple[str, int]]]:
     """Driver-side tokenization of the (tiny) query set — the same clean
-    semantics as the corpus pipeline; no Spark job."""
+    semantics as the corpus pipeline; no Spark job. Returns query_id →
+    its term-sorted (term, qtf) pairs."""
     from collections import Counter
 
     from sparkrec.functions.textprep import py_tokenize
 
-    rows: list[tuple[str, str, int]] = []
+    rows: dict[str, list[tuple[str, int]]] = {}
     for qid, qtext in queries:
         toks = py_tokenize(
             qtext, min_token_len=min_token_len, remove_numeric=remove_numeric
         )
-        for t, c in sorted(Counter(toks).items()):
-            rows.append((qid, t, c))
+        rows.setdefault(qid, []).extend(sorted(Counter(toks).items()))
     return rows
 
 
@@ -195,115 +265,59 @@ def _lex_lookup(
     )
 
 
-def bm25_query_topk_local(
-    spark: SparkSession,
-    index: Index,
-    queries: list[tuple[str, str]],
-    k: int,
-    min_token_len: int = 2,
-    remove_numeric: bool = True,
-    max_blocks: int = 100_000,
-) -> pd.DataFrame:
-    """Interactive single-digit-latency path: scatter-gather scoring.
+def _plan(
+    spark: SparkSession, index: Index, queries: list[tuple[str, str]],
+    min_token_len: int, remove_numeric: bool,
+) -> tuple[dict[str, dict[str, tuple[float, int]]], list[int], dict[str, str]]:
+    """Freshness check, tokenize, dedup and lexicon lookup for a batch.
 
-    The partition-pruned, term-filtered posting blocks are collected to
-    the driver and the SAME exact WAND kernel runs in-process — one Spark
-    job (the pruned scan), zero shuffles, no Python-worker round-trip.
-    Returns a pandas DataFrame (query_id, rank, doc_id, score), identical
-    values to ``bm25_query_topk``.
-
-    Right for interactive point queries whose terms' posting volume is
-    bounded (the common case — WAND needs block metadata + the blocks it
-    actually decodes). A query over extreme hot terms can exceed the
-    driver budget: above ``max_blocks`` fetched blocks this raises, and
-    the caller should use the distributed path. At the 10^12-turn tier a
-    serving layer would cache the hot blocks driver-side; here the cap
-    keeps the fallback honest.
+    Queries with the same post-tokenize term multiset share one
+    representative query_id (its first occurrence in caller order —
+    deterministic). Returns ``qmeta`` (representative → {term: (idf,
+    qtf)} over its terms present in the lexicon; representatives with
+    none are left out), the term buckets to scan, and ``rep_for_qid``
+    (every query_id → its representative).
     """
     index.check_fresh()
-    qrows = _query_term_rows(queries, min_token_len, remove_numeric)
-    cols = ["query_id", "rank", "doc_id", "score"]
-    empty = pd.DataFrame({c: [] for c in cols})
-    terms = sorted({t for _, t, _ in qrows})
-    if not terms:
-        return empty
-
-    idf_map, buckets = _lex_lookup(spark, index, terms)
-    if not idf_map:
-        return empty
-
-    blocks = (
-        index.postings_for(spark, buckets)
-        .filter(
-            F.col("term_bucket").isin(buckets)
-            & F.col("term").isin(sorted(idf_map))
-        )
-        .select("term", "block_id", "max_tf", "min_dl",
-                "docs_enc", "tfs_enc", "dls_enc")
-        .limit(max_blocks + 1)
-        .toPandas()
-    )
-    if len(blocks) > max_blocks:
-        raise ValueError(
-            f"query touches > {max_blocks} posting blocks — use the "
-            "distributed bm25_query_topk path"
-        )
-
-    out = []
-    for qid in dict.fromkeys(q for q, _, _ in qrows):
-        meta = {
-            t: (idf_map[t], qtf)
-            for q2, t, qtf in qrows
-            if q2 == qid and t in idf_map
-        }
-        if not meta:
-            continue
-        qb = blocks[blocks["term"].isin(meta.keys())]
-        doc_ids, scores = wand_topk(
-            qb, meta, k, index.avgdl, index.k1, index.b
-        )
-        out.append(
-            pd.DataFrame(
-                {
-                    "query_id": qid,
-                    "rank": np.arange(1, len(doc_ids) + 1, dtype=np.int32),
-                    "doc_id": doc_ids,
-                    "score": scores,
-                }
-            )
-        )
-    return pd.concat(out, ignore_index=True) if out else empty
-
-
-def _dedup_reps(
-    queries: list[tuple[str, str]],
-    qrows: list[tuple[str, str, int]],
-) -> tuple[list[tuple[str, str, int]], dict[str, str], bool]:
-    """Batch dedup bookkeeping: one representative query_id per distinct
-    post-tokenize term vector (qrows pairs are term-sorted, so the tuple
-    is canonical; the rep is the first occurrence in caller order —
-    deterministic). Returns (qrows restricted to reps, qid→rep map,
-    whether any fan-out is needed)."""
-    pairs_by_qid: dict[str, list[tuple[str, int]]] = {}
-    for qid, t, qtf in qrows:
-        pairs_by_qid.setdefault(qid, []).append((t, qtf))
+    pairs = _query_term_rows(queries, min_token_len, remove_numeric)
+    # the pairs are term-sorted, so their tuple is a canonical signature
     rep_of_sig: dict[tuple, str] = {}
-    rep_for_qid: dict[str, str] = {}
-    for qid, _qtext in queries:
-        sig = tuple(pairs_by_qid.get(qid, ()))
-        rep_for_qid[qid] = rep_of_sig.setdefault(sig, qid)
-    fan_out = any(rep != qid for qid, rep in rep_for_qid.items())
-    if fan_out:
-        reps = set(rep_of_sig.values())
-        qrows = [row for row in qrows if row[0] in reps]
-    return qrows, rep_for_qid, fan_out
+    rep_for_qid = {
+        qid: rep_of_sig.setdefault(tuple(p), qid) for qid, p in pairs.items()
+    }
+    terms = sorted({t for p in pairs.values() for t, _ in p})
+    if not terms:
+        return {}, [], rep_for_qid
+    idf_map, buckets = _lex_lookup(spark, index, terms)
+    qmeta = {}
+    for rep in rep_of_sig.values():
+        meta = {t: (float(idf_map[t]), qtf) for t, qtf in pairs[rep] if t in idf_map}
+        if meta:
+            qmeta[rep] = meta
+    return qmeta, buckets, rep_for_qid
+
+
+def _blocks(
+    spark: SparkSession, index: Index, qmeta: dict, buckets: list[int], cols: list[str]
+) -> DataFrame:
+    """The pruned block scan: ``cols`` of the posting blocks of every
+    term in ``qmeta``, term_bucket partition filter + pushed term filter."""
+    live_terms = sorted({t for meta in qmeta.values() for t in meta})
+    return (
+        index.postings_for(spark, buckets)
+        .filter(F.col("term_bucket").isin(buckets) & F.col("term").isin(live_terms))
+        .select(*cols)
+    )
 
 
 def _fan_out_result(
     spark: SparkSession, result: DataFrame, rep_for_qid: dict[str, str]
 ) -> DataFrame:
     """Broadcast-join per-representative top-k back to every query_id
-    (exact: the kernel is a pure function of the term vector + index)."""
+    (exact: the kernel is a pure function of the term vector + index).
+    ``result`` is returned as is when no query repeats another."""
+    if all(rep == qid for qid, rep in rep_for_qid.items()):
+        return result
     mapping = spark.createDataFrame(
         sorted((rep, qid) for qid, rep in rep_for_qid.items()),
         "rep string, query_id string",
@@ -315,14 +329,59 @@ def _fan_out_result(
     )
 
 
+def bm25_query_topk_local(
+    spark: SparkSession, index: Index, queries: list[tuple[str, str]], k: int,
+    min_token_len: int = 2, remove_numeric: bool = True,
+    max_blocks: int = 100_000,
+) -> pd.DataFrame:
+    """Interactive single-digit-latency path: scatter-gather scoring.
+
+    The partition-pruned, term-filtered posting blocks are collected to
+    the driver and the SAME exact WAND kernel runs in-process — one Spark
+    job (the pruned scan), zero shuffles, no Python-worker round-trip.
+    Returns a pandas DataFrame (query_id, rank, doc_id, score), identical
+    values to ``bm25_query_topk``. Queries with the same post-tokenize
+    term multiset are scored once, as in the batch paths.
+
+    Right for interactive point queries whose terms' posting volume is
+    bounded (the common case — WAND needs block metadata + the blocks it
+    actually decodes). A query over extreme hot terms can exceed the
+    driver budget: above ``max_blocks`` fetched blocks this raises, and
+    the caller should use the distributed path. At the 10^12-turn tier a
+    serving layer would cache the hot blocks driver-side; here the cap
+    keeps the fallback honest.
+    """
+    qmeta, buckets, rep_for_qid = _plan(
+        spark, index, queries, min_token_len, remove_numeric
+    )
+    if not qmeta:
+        return _ranked(None, np.zeros(0, np.int64), np.zeros(0), k)
+
+    blocks = (
+        _blocks(spark, index, qmeta, buckets, _WAND_COLS)
+        .limit(max_blocks + 1)
+        .toPandas()
+    )
+    if len(blocks) > max_blocks:
+        raise ValueError(
+            f"query touches > {max_blocks} posting blocks — use the "
+            "distributed bm25_query_topk path"
+        )
+
+    top = {
+        rep: wand_topk(blocks[blocks["term"].isin(meta.keys())], meta, k,
+                       index.avgdl, index.k1, index.b)
+        for rep, meta in qmeta.items()
+    }
+    return pd.concat(
+        [_ranked(qid, *top[rep], k) for qid, rep in rep_for_qid.items() if rep in top],
+        ignore_index=True,
+    )
+
+
 def bm25_query_topk(
-    spark: SparkSession,
-    index: Index,
-    queries: list[tuple[str, str]],
-    k: int,
-    min_token_len: int = 2,
-    remove_numeric: bool = True,
-    n_score_partitions: int | None = None,
+    spark: SparkSession, index: Index, queries: list[tuple[str, str]], k: int,
+    min_token_len: int = 2, remove_numeric: bool = True,
 ) -> DataFrame:
     """Batch top-k for a list of (query_id, text) against a built index.
 
@@ -331,109 +390,44 @@ def bm25_query_topk(
     pruning) → partition-pruned posting-block scan → ``applyInPandas``
     groups running the exact WAND kernel → (query_id, rank, doc_id, score).
 
-    ``n_score_partitions`` controls intra-query scoring parallelism: by
-    default each query is ONE kernel group (lowest overhead, maximal WAND
+    Each query is ONE kernel group (lowest overhead, maximal WAND
     pruning — right for interactive latency at moderate posting volume).
-    With P > 1 the doc-id space is split into P aligned ranges scored in
-    parallel (blocks are doc-aligned across terms, so every range is
-    score-complete); per-range top-k candidates are then merged by a
-    global window. Exactness is unaffected — only the shared θ threshold
-    is weaker, trading some pruning for P-way parallelism on hot terms.
-    At the 100 TB tier P ≈ number of executor cores is the right setting
-    for fat analytical queries; interactive point queries keep P = 1.
+    To split the scoring of fat analytical queries across doc ranges,
+    use ``bm25_query_topk_scan``.
 
-    Textually identical queries (same post-tokenize term multiset) are
-    scored ONCE and fanned back out to every query_id with a broadcast
-    join: group-by-query scoring replicates each shared posting block
-    across the exchange once per query_id, so B duplicates would cost
-    B× the shuffle bytes for bit-identical kernel output (the kernel is
-    a pure function of the term vector and the index — measured on a
-    96k-conv index: an 80×-tiled batch is shuffle-bandwidth-bound,
-    BENCH.md "Query-batch redundancy"). All-distinct batches take the
-    original path unchanged.
+    Queries with the same post-tokenize term multiset are scored ONCE
+    and fanned back out to every query_id with a broadcast join:
+    group-by-query scoring replicates each shared posting block across
+    the exchange once per query_id, so B duplicates would cost B× the
+    shuffle bytes for bit-identical kernel output (the kernel is a pure
+    function of the term vector and the index — measured on a 96k-conv
+    index: an 80×-tiled batch is shuffle-bandwidth-bound, BENCH.md
+    "Query-batch redundancy"). All-distinct batches skip the fan-out.
     """
-    index.check_fresh()
-    qrows = _query_term_rows(queries, min_token_len, remove_numeric)
-    terms = sorted({t for _, t, _ in qrows})
-    if not terms:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-
-    qrows, rep_for_qid, fan_out = _dedup_reps(queries, qrows)
-
-    idf_map, buckets = _lex_lookup(spark, index, terms)
-    live_terms = sorted(idf_map)
-    if not live_terms:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-
-    blocks = index.postings_for(spark, buckets).filter(
-        F.col("term_bucket").isin(buckets) & F.col("term").isin(live_terms)
+    qmeta, buckets, rep_for_qid = _plan(
+        spark, index, queries, min_token_len, remove_numeric
     )
+    if not qmeta:
+        return spark.createDataFrame([], TOPK_SCHEMA)
+
     q_with_idf = spark.createDataFrame(
-        [(qid, t, qtf, idf_map[t]) for qid, t, qtf in qrows if t in idf_map],
+        [(rep, t, qtf, idf)
+         for rep, meta in qmeta.items() for t, (idf, qtf) in meta.items()],
         "query_id string, term string, qtf int, idf double",
     )
-    joined = blocks.join(F.broadcast(q_with_idf), "term").select(
-        "query_id", "term", "qtf", "idf", "block_id", "max_tf", "min_dl",
-        "docs_enc", "tfs_enc", "dls_enc",
+    joined = _blocks(spark, index, qmeta, buckets, _WAND_COLS).join(
+        F.broadcast(q_with_idf), "term"
     )
-
     avgdl, k1, b = index.avgdl, index.k1, index.b
-
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = pdf["query_id"].iloc[0]
-        meta = {}
-        for t, idf, qtf in zip(pdf["term"], pdf["idf"], pdf["qtf"]):
-            meta[t] = (float(idf), int(qtf))
-        doc_ids, scores = wand_topk(pdf, meta, k, avgdl, k1, b)
-        return pd.DataFrame(
-            {
-                "query_id": qid,
-                "rank": np.arange(1, len(doc_ids) + 1, dtype=np.int32),
-                "doc_id": doc_ids,
-                "score": scores,
-            }
-        )
-
-    if not n_score_partitions or n_score_partitions <= 1:
-        result = joined.groupBy("query_id").applyInPandas(
-            score_group, schema=TOPK_SCHEMA
-        )
-    else:
-        # parallel mode: doc-aligned range split → per-range exact top-k →
-        # global merge (re-rank) per query
-        max_block = max(1, index.n_docs // index.block_range)
-        blocks_per_part = max(
-            1, (max_block + n_score_partitions) // n_score_partitions
-        )
-        ranged = joined.withColumn(
-            "_range", (F.col("block_id") / F.lit(blocks_per_part)).cast("long")
-        )
-        partial = ranged.groupBy("query_id", "_range").applyInPandas(
-            score_group, schema=TOPK_SCHEMA
-        )
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        result = (
-            partial.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "doc_id", "score")
-        )
-
-    if fan_out:
-        result = _fan_out_result(spark, result, rep_for_qid)
-    return result
+    result = joined.groupBy("query_id").applyInPandas(
+        lambda pdf: _score_group(pdf, k, avgdl, k1, b), schema=TOPK_SCHEMA
+    )
+    return _fan_out_result(spark, result, rep_for_qid)
 
 
 def bm25_query_topk_scan(
-    spark: SparkSession,
-    index: Index,
-    queries: list[tuple[str, str]],
-    k: int,
-    min_token_len: int = 2,
-    remove_numeric: bool = True,
+    spark: SparkSession, index: Index, queries: list[tuple[str, str]], k: int,
+    min_token_len: int = 2, remove_numeric: bool = True,
     n_ranges: int | None = None,
 ) -> DataFrame:
     """Batch-analytic top-k: corpus-proportional (query-count-independent)
@@ -445,16 +439,17 @@ def bm25_query_topk_scan(
     skips most of the corpus, but for B analytical queries sharing hot
     terms the exchange carries B× the bytes (measured shuffle-bandwidth-
     bound at 10k queries, BENCH.md "Query-batch redundancy"). This path
-    inverts the movement: queries (tiny) ship to the data in the UDF
-    closure, blocks group by doc-range only — each block row crosses the
+    inverts the movement: queries (tiny) ship to the data with the UDF,
+    blocks group by doc-range only — each block row crosses the
     exchange exactly ONCE regardless of batch size — and every query is
     scored inside the range group from once-decoded arrays (exhaustive
     per range, no WAND pruning: an analytical batch touches most blocks
     anyway, so there is nothing to skip). Blocks are doc-aligned across
     terms (operators/indexer.py), so each range is score-complete and
     the exact global top-k is the windowed merge of per-range top-k
-    candidates — the same merge the ``n_score_partitions`` mode uses.
-    Results are identical (ids AND scores) to ``bm25_query_topk``.
+    candidates. ``n_ranges`` > 1 therefore also splits a single fat
+    query's scoring across doc ranges. Results are identical (ids AND
+    scores) to ``bm25_query_topk``.
 
     At the 100 TB tier this is the map-side-join shape: a doc-range-
     partitioned postings layout would make the single exchange a
@@ -471,116 +466,28 @@ def bm25_query_topk_scan(
     bandwidth-vs-CPU trade, in the same direction, as the two-phase
     postings encode (jobs/run_queries.py ``--mode scan``).
     """
-    index.check_fresh()
-    qrows = _query_term_rows(queries, min_token_len, remove_numeric)
-    terms = sorted({t for _, t, _ in qrows})
-    if not terms:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    qrows, rep_for_qid, fan_out = _dedup_reps(queries, qrows)
-
-    idf_map, buckets = _lex_lookup(spark, index, terms)
-    qmeta: dict[str, dict[str, tuple[float, int]]] = {}
-    for qid, t, qtf in qrows:
-        if t in idf_map:
-            qmeta.setdefault(qid, {})[t] = (float(idf_map[t]), int(qtf))
-    qmeta = {q: m for q, m in qmeta.items() if m}
+    qmeta, buckets, rep_for_qid = _plan(
+        spark, index, queries, min_token_len, remove_numeric
+    )
     if not qmeta:
         return spark.createDataFrame([], TOPK_SCHEMA)
-    live_terms = sorted({t for m in qmeta.values() for t in m})
-    q_items = sorted(qmeta.items())
 
-    blocks = (
-        index.postings_for(spark, buckets)
-        .filter(
-            F.col("term_bucket").isin(buckets)
-            & F.col("term").isin(live_terms)
-        )
-        .select("term", "block_id", "docs_enc", "tfs_enc", "dls_enc")
-    )
     max_block = max(1, index.n_docs // index.block_range)
     n_ranges = n_ranges or spark.sparkContext.defaultParallelism * 4
-    blocks_per_part = max(1, (max_block + n_ranges) // n_ranges)
-    ranged = blocks.withColumn(
-        "_range", (F.col("block_id") / F.lit(blocks_per_part)).cast("long")
+    blocks_per_range = max(1, (max_block + n_ranges) // n_ranges)
+    ranged = _blocks(
+        spark, index, qmeta, buckets, ["term", "block_id", *_ENC_COLS]
+    ).withColumn(
+        "_range", (F.col("block_id") / F.lit(blocks_per_range)).cast("long")
     )
-
-    avgdl, k1, b = index.avgdl, index.k1, index.b
-
-    def score_range(pdf: pd.DataFrame) -> pd.DataFrame:
-        # canonical row order, then decode every block ONCE; per-posting
-        # bm25 weights are query-independent, so they are computed once
-        # too — per query only its factor-scaled gather+reduce remains
-        pdf = pdf.sort_values(
-            ["term", "block_id"], kind="mergesort", ignore_index=True
-        )
-        d_lists, t_lists, l_lists = decode_postings_many(
-            list(pdf["docs_enc"]), list(pdf["tfs_enc"]), list(pdf["dls_enc"])
-        )
-        term_dw: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        term_vals = list(pdf["term"])
-        i = 0
-        while i < len(term_vals):
-            j = i
-            while j < len(term_vals) and term_vals[j] == term_vals[i]:
-                j += 1
-            docs = np.concatenate(d_lists[i:j]).astype(np.int64)
-            tfs = np.concatenate(t_lists[i:j])
-            dls = np.concatenate(l_lists[i:j])
-            term_dw[term_vals[i]] = (docs, bm25_weight(tfs, dls, avgdl, k1, b))
-            i = j
-        out = []
-        for qid, meta in q_items:
-            hit = [t for t in sorted(meta) if t in term_dw]
-            if not hit:
-                continue
-            docs = np.concatenate([term_dw[t][0] for t in hit])
-            w = np.concatenate(
-                [term_dw[t][1] * (meta[t][0] * meta[t][1]) for t in hit]
-            )
-            srt = np.argsort(docs, kind="stable")
-            sd, sw = docs[srt], w[srt]
-            starts = np.flatnonzero(
-                np.concatenate(([True], sd[1:] != sd[:-1]))
-            )
-            doc_ids = sd[starts]
-            scores = np.add.reduceat(sw, starts)
-            if len(scores) > k:
-                thr = np.partition(-scores, k - 1)[k - 1]
-                keep = np.flatnonzero(-scores <= thr)
-                doc_ids, scores = doc_ids[keep], scores[keep]
-            order = np.lexsort((doc_ids, -scores))[:k]
-            doc_ids, scores = doc_ids[order], scores[order]
-            out.append(
-                pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "rank": np.arange(
-                            1, len(doc_ids) + 1, dtype=np.int32
-                        ),
-                        "doc_id": doc_ids,
-                        "score": scores,
-                    }
-                )
-            )
-        if not out:
-            return pd.DataFrame(
-                {"query_id": [], "rank": [], "doc_id": [], "score": []}
-            )
-        return pd.concat(out, ignore_index=True)
-
-    partial = ranged.groupBy("_range").applyInPandas(
-        score_range, schema=TOPK_SCHEMA
+    q_items, avgdl, k1, b = sorted(qmeta.items()), index.avgdl, index.k1, index.b
+    per_range = ranged.groupBy("_range").applyInPandas(
+        lambda pdf: _score_range(pdf, q_items, k, avgdl, k1, b), schema=TOPK_SCHEMA
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     result = (
-        partial.withColumn("rank", F.row_number().over(w))
+        per_range.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "doc_id", "score")
     )
-    if fan_out:
-        result = _fan_out_result(spark, result, rep_for_qid)
-    return result
+    return _fan_out_result(spark, result, rep_for_qid)

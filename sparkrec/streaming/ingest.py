@@ -45,9 +45,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkrec.operators.bm25 import term_freqs, tokenize_docs
+from sparkrec.operators.bm25 import idf_expr, term_freqs, tokenize_docs
 from sparkrec.operators.docs import assemble_docs, assign_doc_ids
-from sparkrec.operators.indexer import IndexConfig, encode_postings
+from sparkrec.operators.indexer import IndexConfig, encode_postings, term_bucket
 from sparkrec.sources.tables import (
     bump_index_epoch,
     read_table,
@@ -161,18 +161,8 @@ def _merge_locked(
                 + F.coalesce(F.col("df_new"), F.lit(0))
             ).alias("df"),
         )
-        .withColumn(
-            "idf",
-            F.log(
-                (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-                + F.lit(1.0)
-            ),
-        )
-        .withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(cfg.n_term_buckets)).cast("int"),
-        )
+        .withColumn("idf", idf_expr(F.col("df"), n_docs))
+        .withColumn("term_bucket", term_bucket(cfg.n_term_buckets))
     )
 
     # docs append FIRST (replay marker — see above), then postings, then
@@ -190,8 +180,7 @@ def _merge_locked(
     # needed anyway for df_delta above. Either path yields bit-identical
     # blocks, so merge==rebuild stays exact under the twophase default.
     enc = encode_postings(tf, n_docs, avgdl, cfg).withColumn(
-        "term_bucket",
-        F.pmod(F.xxhash64("term"), F.lit(cfg.n_term_buckets)).cast("int"),
+        "term_bucket", term_bucket(cfg.n_term_buckets)
     )
     write_table(enc, index_root, "postings", partition_by=["term_bucket"],
                 mode="append")

@@ -152,9 +152,11 @@ def test_local_scoring_matches_distributed(spark, index, queries_pdf):
 
 
 def test_parallel_scoring_matches_single_group(spark, index, queries_pdf):
-    """Doc-range-parallel WAND (P>1) is exact: identical ids AND scores to
-    the one-group-per-query path, and to it again after warm() pins the
-    serving tables in memory."""
+    """Doc-range-parallel scoring (scan mode at P>1 ranges) is exact:
+    identical ids AND scores to the one-group-per-query path, and to it
+    again after warm() pins the serving tables in memory."""
+    from sparkrec.operators.scorer import bm25_query_topk_scan
+
     queries = list(zip(queries_pdf["query_id"], queries_pdf["query_text"]))[:8]
     k = 10
     single = bm25_query_topk(spark, index, queries, k=k).collect()
@@ -164,7 +166,7 @@ def test_parallel_scoring_matches_single_group(spark, index, queries_pdf):
             (r["query_id"], r["rank"]): (r["doc_id"], r["score"]) for r in rows
         }
 
-    par = bm25_query_topk(spark, index, queries, k=k, n_score_partitions=4)
+    par = bm25_query_topk_scan(spark, index, queries, k=k, n_ranges=4)
     assert keyed(par.collect()) == keyed(single)
 
     index.warm(spark)
@@ -173,11 +175,17 @@ def test_parallel_scoring_matches_single_group(spark, index, queries_pdf):
 
 
 def test_duplicate_query_batch_dedups_and_fans_out(spark, index, queries_pdf):
-    """Textually identical queries are scored once and fanned out
-    bit-exactly: every duplicate query_id gets rows identical
-    (rank, doc_id, score) to the same text scored in an all-distinct
-    batch (the undeduped path), in both scoring modes; queries whose
-    terms are absent from the index stay absent for every duplicate."""
+    """Queries with the same post-tokenize term multiset are scored once
+    and fanned out bit-exactly: every duplicate query_id gets rows
+    identical (rank, doc_id, score) to the same text scored in an
+    all-distinct batch (the undeduped path), in the group path and in
+    scan mode at P>1 ranges; queries whose terms are absent from the
+    index stay absent for every duplicate."""
+    from sparkrec.operators.scorer import (
+        bm25_query_topk_local,
+        bm25_query_topk_scan,
+    )
+
     base = list(zip(queries_pdf["query_id"], queries_pdf["query_text"]))[:4]
     k = 10
 
@@ -204,11 +212,12 @@ def test_duplicate_query_batch_dedups_and_fans_out(spark, index, queries_pdf):
                 assert got[f"{qid}-t{rep}"] == want[qid]
 
     got_par = by_qid(
-        bm25_query_topk(
-            spark, index, tiled, k=k, n_score_partitions=2
-        ).collect()
+        bm25_query_topk_scan(spark, index, tiled, k=k, n_ranges=2).collect()
     )
     assert got_par == got
+    # the point path shares the same dedup
+    local = bm25_query_topk_local(spark, index, tiled, k)
+    assert by_qid(local.to_dict("records")) == got
 
     # mixed batch: duplicates alongside originals, plus duplicated
     # queries whose only term is absent from the index
